@@ -54,10 +54,6 @@ class ValidationError(IcebergError):
     """Invalid schema / expression / argument (reference: errors.go validation family)."""
 
 
-class IOError_(IcebergError):
-    """Storage-layer failure (reference: errors.go IO family)."""
-
-
 def is_retryable(err: BaseException) -> bool:
     """True if the operation may be retried (reference: errors.go:115-123)."""
     return isinstance(err, IcebergError) and err.retryable

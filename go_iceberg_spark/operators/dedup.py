@@ -248,18 +248,6 @@ def repeated_span_coverage(
     )
 
 
-def minhash_signatures(df: DataFrame, id_col: str, text_col: str, *, n: int = 3, mode: str = "word") -> DataFrame:
-    """Per-id MinHash signature columns ``mh_0..mh_{k-1}``:
-    mh_j = min over shingles of ((a_j * (h % P) + b_j) % P)."""
-    sh = _shingle_table(df, id_col, text_col, n, mode)
-    hp = F.col("_h") % MINHASH_PRIME
-    aggs = [
-        F.min((F.lit(a) * hp + F.lit(b)) % MINHASH_PRIME).alias(f"mh_{j}")
-        for j, (a, b) in enumerate(MINHASH_COEFFS)
-    ]
-    return sh.groupBy(F.col("_id").alias(id_col)).agg(*aggs)
-
-
 def _minhash_signature_table(df: DataFrame, id_col: str, text_col: str, n: int, mode: str) -> DataFrame:
     """Per-doc signature rows (_id, _hs, _sz, mh_0..mh_{k-1}): ONE shingle
     pass computes the k minhash values AND the full shingle-hash set + size

@@ -271,7 +271,8 @@ def rewrite_data_files(table, *, target_file_size_bytes: int = 128 * 1024 * 1024
     from ..expr import might_match, simplify
     from .incremental import _read_entries, files_that_may_lose_rows
     from .metadata import CONTENT_DATA, CONTENT_POSITION_DELETES, OP_REPLACE
-    from .scan import POS_DELETE_FILE_COL, _encode_filter, _stats_for_pruning
+    from .planning import _stats_for_pruning
+    from .scan import POS_DELETE_FILE_COL, _encode_filter
 
     def build_and_commit():
         # rebuilt per retry (r6): a compaction racing a writer must re-read

@@ -41,7 +41,8 @@ from .metadata import (
     OP_REPLACE,
     DataFileEntry,
 )
-from .scan import _encode_filter, _stats_for_pruning, _align_to_schema
+from .planning import _stats_for_pruning
+from .scan import _encode_filter, _align_to_schema
 from .write import write_data_files
 
 COPY_ON_WRITE = "copy-on-write"  # reference: table/delete.go:17-25

@@ -3,9 +3,23 @@
 The reference walks every manifest entry in a driver loop and stubs its
 pruning hooks to always-true (reference: table/scan.go:101-190,
 table/insert.go:255-266). That is fine at thousands of files and wrong at
-millions. This module provides the two scale paths the scan builder picks
+millions. This module provides the three scale paths the scan builder picks
 from (plus the snapshot-level short-circuit):
 
+0. ``prune_cached`` — entry lists the table already holds in memory (its
+   manifest cache: members and whole-snapshot sets up to the scan's
+   ``_CACHE_ENTRY_LIMIT``). Each cached list gets a ``MemberStats`` index,
+   built lazily per filter-referenced field and kept as long as the list:
+   numpy arrays of presence, min, max, null, value and NaN counts. The
+   vectorized evaluator ``_vector_match`` (the same one tier 1 runs over
+   parquet columns) computes a conservative mask over it, and the exact
+   ``might_match`` runs only on the mask's survivors, so results are those
+   of the per-entry loop (bloom, NaN and mixed-encoding rules included) at
+   numpy cost. With the table's cached manifest lists (member bounds
+   already decoded), a warm point plan does no file I/O, no JSON parsing
+   and no per-entry Python work: on perfbench ``table-metadata-20k`` (~5.5k
+   cached entries left after the member skip, 4-core box) a point
+   ``plan_files`` fell from 89 ms to 0.48 ms.
 1. ``prune_manifest_driver`` — read the manifest parquet with pyarrow, decode
    bound values ONLY for filter-referenced fields, evaluate might-match per
    row, and materialize ``DataFileEntry`` objects for survivors only. At 100k
@@ -19,7 +33,7 @@ from (plus the snapshot-level short-circuit):
    only surviving entries (bounded by what the driver must hand to
    ``spark.read.parquet`` anyway).
 
-Both paths are conservative in exactly the way ``expr.might_match`` is: a
+All paths are conservative in exactly the way ``expr.might_match`` is: a
 file is dropped only when its stats PROVE no row can match; anything
 undecidable survives and the row-level filter finishes the job.
 
@@ -34,6 +48,8 @@ manifest from the manifest list.
 from __future__ import annotations
 
 import json
+import math
+import numbers
 from typing import Any
 
 from ..expr import ColumnStats, Expression, Op, might_match, referenced_columns
@@ -69,28 +85,59 @@ class _NotVectorizable(Exception):
     """Filter shape the numpy evaluator doesn't cover — fall back per-row."""
 
 
-class _ColArrays:
-    """Per-row min/max/null/value arrays for ONE field, extracted from the
-    manifest's flattened list columns without converting the whole table."""
+def _field_view(present, mins, maxs, nulls, vals, nans, float_bounds) -> dict:
+    """The per-row arrays ``_vector_match`` reads for one field, derived
+    once from a source's raw stats arrays (NaN = unknown everywhere; a NaN
+    count of -1 = not collected) so that each filter leaf costs one to three
+    numpy operations. Bounds are folded with the null and presence rules of
+    ``expr.might_match``: a row without stats or without usable bounds gets
+    (-inf, +inf) and survives every comparison, an all-null row gets
+    (+inf, -inf) and survives none."""
+    import numpy as np
 
-    def __init__(self, t, fid: int, numeric: bool):
+    missing = ~present
+    all_null = ~np.isnan(nulls) & ~np.isnan(vals) & (nulls >= vals)
+    keep = missing | (~all_null & (np.isnan(mins) | np.isnan(maxs)))
+    # a row may hold NaN (which sorts above every bound) unless its NaN
+    # count is PROVEN zero; whether that matters depends on the column type
+    nan_if_float = ~all_null & ~(nans == 0)
+    return {
+        "lo": np.where(keep, -np.inf, np.where(all_null, np.inf, mins)),
+        "hi": np.where(keep, np.inf, np.where(all_null, -np.inf, maxs)),
+        "null_keep": missing | np.isnan(nulls) | (nulls > 0),
+        "not_null_keep": missing | ~all_null,
+        "nan_if_float": nan_if_float,
+        "nan_typed": nan_if_float & float_bounds,
+    }
+
+
+class _ManifestTableStats:
+    """Stats source over a manifest parquet table: per-field row arrays
+    extracted from the flattened list columns without converting the whole
+    table."""
+
+    def __init__(self, t):
+        self.t = t
+        self.n = t.num_rows
+        self._fields: dict[int, dict] = {}
+
+    def field(self, fid: int) -> dict:
         import numpy as np
 
+        if fid in self._fields:
+            return self._fields[fid]
+        t, n = self.t, self.n
         fids_col = t.column("stats_fids").combine_chunks()
         off = np.asarray(fids_col.offsets)
         flat = np.asarray(fids_col.values)
-        n = len(off) - 1
         sel = np.flatnonzero(flat == fid)
         rows = np.searchsorted(off, sel, side="right") - 1
 
         def pick(name, decode):
-            col = t.column(name).combine_chunks().values
-            vals = decode(col.take(sel))
-            return rows, vals
-
-        self.present = np.zeros(n, dtype=bool)
-        self.present[rows] = True
-        self.numeric = numeric
+            # row-indexed; NaN (= unknown) where the row has no stats entry
+            out = np.full(n, np.nan)
+            out[rows] = decode(t.column(name).combine_chunks().values.take(sel))
+            return out
 
         def dec_num(arr):
             s = np.asarray(arr.to_pylist(), dtype=object)
@@ -102,41 +149,95 @@ class _ColArrays:
             return out
 
         def dec_int(arr):
-            a = arr.to_numpy(zero_copy_only=False).astype(np.float64)
-            return a  # None -> nan
+            return arr.to_numpy(zero_copy_only=False).astype(np.float64)  # None -> nan
 
-        _, self.mins = pick("stats_min_json", dec_num) if numeric else (None, None)
-        _, self.maxs = pick("stats_max_json", dec_num) if numeric else (None, None)
-        _, self.nulls = pick("stats_null_counts", dec_int)
-        _, self.vals = pick("stats_value_counts", dec_int)
-        # NaN counts: -1/absent = unknown (see metadata.MANIFEST_SCHEMA)
-        if "stats_nan_counts" in t.column_names:
-            _, self.nans = pick("stats_nan_counts", dec_int)
-        else:
-            self.nans = np.full(len(sel), -1.0)
-        self.rows = rows
-        self.n = n
+        present = np.zeros(n, dtype=bool)
+        present[rows] = True
+        a = self._fields[fid] = _field_view(
+            present,
+            pick("stats_min_json", dec_num),
+            pick("stats_max_json", dec_num),
+            pick("stats_null_counts", dec_int),
+            pick("stats_value_counts", dec_int),
+            # NaN counts: -1/absent = unknown (see metadata.MANIFEST_SCHEMA)
+            (pick("stats_nan_counts", dec_int)
+             if "stats_nan_counts" in t.column_names else np.full(n, -1.0)),
+            # JSON-encoded bounds: the schema type alone decides float-ness
+            False,
+        )
+        return a
 
-    def scatter(self, flat_vals):
-        """Row-indexed array (NaN where the field has no stats entry)."""
+
+def _as_float(v) -> float:
+    """A numeric bound as float64; NaN (= unknown, never prunes) for None,
+    strings and anything else ``might_match`` could not order against a
+    numeric literal."""
+    if isinstance(v, numbers.Real):
+        try:
+            return float(v)
+        except OverflowError:
+            pass
+    return math.nan
+
+
+def _count(v) -> float:
+    return math.nan if v is None else float(v)
+
+
+class MemberStats:
+    """Stats source over one cached, immutable entry list (a manifest
+    member, or a snapshot's whole entry set): the same per-field arrays
+    ``_ManifestTableStats`` yields, built lazily from the entries' decoded
+    stats the first time a filter references the field, then reused by
+    every later plan. Lives in the table's manifest cache beside the entry
+    list it indexes (``table.ManifestCache.stats_index``)."""
+
+    def __init__(self, entries: list[DataFileEntry]):
         import numpy as np
 
-        out = np.full(self.n, np.nan)
-        out[self.rows] = flat_vals
-        return out
+        self.entries = entries
+        self.n = len(entries)
+        self.is_delete = np.fromiter((e.content != CONTENT_DATA for e in entries),
+                                     dtype=bool, count=self.n)
+        self._fields: dict[int, dict] = {}
+
+    def field(self, fid: int) -> dict:
+        import numpy as np
+
+        if fid in self._fields:
+            return self._fields[fid]
+        n = self.n
+        present = np.zeros(n, dtype=bool)
+        # NaN-initialized: unknown min/max/counts for rows without an entry
+        mins, maxs, nulls, vals, nans = (np.full(n, np.nan) for _ in range(5))
+        float_bounds = np.zeros(n, dtype=bool)
+        for i, e in enumerate(self.entries):
+            s = e.column_stats.get(fid)
+            if s is None:
+                continue
+            lo, hi = s.get("min"), s.get("max")
+            present[i] = True
+            mins[i], maxs[i] = _as_float(lo), _as_float(hi)
+            # might_match treats a file as NaN-capable when either bound
+            # is a Python float, whatever the schema type says
+            float_bounds[i] = isinstance(lo, float) or isinstance(hi, float)
+            nulls[i] = _count(s.get("null_count"))
+            vals[i] = _count(s.get("value_count"))
+            nans[i] = _count(s.get("nan_count"))
+        a = self._fields[fid] = _field_view(present, mins, maxs, nulls, vals, nans,
+                                            float_bounds)
+        return a
 
 
-def _vector_match(flt: Expression, t, schema: Schema):
-    """Vectorized might-match over the manifest table; mirrors
-    expr.might_match node for node, returning a boolean row mask. Raises
-    _NotVectorizable for string-typed bounds or ops numpy can't express
-    (the per-row fallback covers those)."""
+def _vector_match(flt: Expression, src, schema: Schema):
+    """Vectorized might-match over a stats source (``_ManifestTableStats``
+    or ``MemberStats``); mirrors expr.might_match node for node, returning a
+    boolean row mask (possibly an array the source keeps: never write to
+    it). Raises _NotVectorizable for string-typed bounds or ops numpy can't
+    express (the per-row fallback covers those)."""
     import numpy as np
 
-    n = t.num_rows
-    cache: dict[int, dict] = {}
-
-    def field_arrays(col: str):
+    def field_view(col: str):
         f = schema.find_field(col)
         if f is None:
             raise _NotVectorizable(col)
@@ -144,87 +245,87 @@ def _vector_match(flt: Expression, t, schema: Schema):
         if prim not in ("int", "long", "float", "double", "date", "time",
                         "timestamp", "timestamptz", "boolean"):
             raise _NotVectorizable(f"{col}: {prim}")  # string/binary bounds
-        if f.field_id not in cache:
-            ca = _ColArrays(t, f.field_id, numeric=True)
-            cache[f.field_id] = {
-                "present": ca.present,
-                "mins": ca.scatter(ca.mins),
-                "maxs": ca.scatter(ca.maxs),
-                "nulls": ca.scatter(ca.nulls),
-                "vals": ca.scatter(ca.vals),
-                # scatter fills NaN (=unknown) for rows without a stats entry
-                "nans": ca.scatter(ca.nans),
-                "is_float": prim in ("float", "double"),
-            }
-        return cache[f.field_id]
-
-    TRUE = np.ones(n, dtype=bool)
+        return src.field(f.field_id), prim in ("float", "double")
 
     def build(e: Expression):
-        if e.op is Op.ALWAYS_TRUE:
-            return TRUE
-        if e.op is Op.ALWAYS_FALSE:
-            return ~TRUE
-        if e.op is Op.AND:
-            out = TRUE
-            for c in e.children:
-                out = out & build(c)
+        op = e.op
+        if op is Op.ALWAYS_TRUE or op is Op.NOT:
+            return np.ones(src.n, dtype=bool)  # NOT: conservative, as expr.might_match
+        if op is Op.ALWAYS_FALSE:
+            return np.zeros(src.n, dtype=bool)
+        if op is Op.AND or op is Op.OR:
+            if not e.children:
+                return np.full(src.n, op is Op.AND)
+            out = build(e.children[0])
+            for c in e.children[1:]:
+                out = (out & build(c)) if op is Op.AND else (out | build(c))
             return out
-        if e.op is Op.OR:
-            out = ~TRUE
-            for c in e.children:
-                out = out | build(c)
-            return out
-        if e.op is Op.NOT:
-            return TRUE  # conservative, as expr.might_match
 
-        a = field_arrays(e.column)
-        missing = ~a["present"]
-        nulls, vals = a["nulls"], a["vals"]
+        a, is_float = field_view(e.column)
+        if op is Op.IS_NULL:
+            return a["null_keep"]
+        if op is Op.NOT_NULL:
+            return a["not_null_keep"]
 
-        if e.op is Op.IS_NULL:
-            return missing | np.isnan(nulls) | (nulls > 0)
-        if e.op is Op.NOT_NULL:
-            all_null = ~np.isnan(nulls) & ~np.isnan(vals) & (nulls >= vals)
-            return missing | ~all_null
-
-        if e.op in (Op.EQ, Op.GT, Op.GTE, Op.LT, Op.LTE, Op.IN):
-            lo, hi = a["mins"], a["maxs"]
-            all_null = ~np.isnan(nulls) & ~np.isnan(vals) & (nulls >= vals)
-            no_bounds = np.isnan(lo) | np.isnan(hi)
-            values = list(e.values) if e.op is Op.IN else [e.value]
-            try:
-                fvals = [float(v) for v in values]
-            except (TypeError, ValueError):
+        if op in (Op.EQ, Op.GT, Op.GTE, Op.LT, Op.LTE, Op.IN):
+            values = e.values if op is Op.IN else (e.value,)
+            if not all(isinstance(v, numbers.Real) for v in values):
+                # a string literal would float() fine ("5") yet never order
+                # against numeric bounds in might_match (TypeError -> keep)
                 raise _NotVectorizable(f"non-numeric literal for {e.column}")
-            if any(np.isnan(v) for v in fvals):
+            fvals = [float(v) for v in values]
+            if any(math.isnan(v) for v in fvals):
                 # NaN literals need expr.might_match's NaN ordering rules
                 raise _NotVectorizable(f"NaN literal for {e.column}")
-            if any(abs(v) > 2.0**53 for v in fvals):
-                # beyond exact float64 integers the comparison could prune a
-                # file wrongly — use the exact per-row path instead
+            if any(abs(v) >= 2.0**53 for v in fvals):
+                # from 2^53 on, float64 rounding of a bound can tie the
+                # literal (2^53 + 1 -> 2^53) and flip a strict comparison —
+                # use the exact per-row path instead
                 raise _NotVectorizable(f"literal beyond float64 precision for {e.column}")
+            lo, hi = a["lo"], a["hi"]
+            if op is Op.EQ or op is Op.IN:
+                if not fvals:
+                    return np.zeros(src.n, dtype=bool)
+                out = (lo <= fvals[0]) & (hi >= fvals[0])
+                for v in fvals[1:]:
+                    out = out | ((lo <= v) & (hi >= v))
+                return out
+            v = fvals[0]
+            if op is Op.LT:
+                return lo < v
+            if op is Op.LTE:
+                return lo <= v
             # high-side prunes on float columns are only legal with a PROVEN
             # zero nan count: NaN rows sort above every bound (expr.py NaN
-            # guard). nans: NaN = unknown, -1 = not collected, 0 = proven.
-            may_nan = a["is_float"] & ~(a["nans"] == 0)
-            if e.op in (Op.EQ, Op.IN):
-                pred = ~TRUE
-                for v in fvals:
-                    pred = pred | ((lo <= v) & (v <= hi))
-            elif e.op is Op.GT:
-                pred = (hi > fvals[0]) | may_nan
-            elif e.op is Op.GTE:
-                pred = (hi >= fvals[0]) | may_nan
-            elif e.op is Op.LT:
-                pred = lo < fvals[0]
-            else:
-                pred = lo <= fvals[0]
-            return missing | (~all_null & (no_bounds | pred))
+            # guard)
+            may_nan = a["nan_if_float"] if is_float else a["nan_typed"]
+            return ((hi > v) if op is Op.GT else (hi >= v)) | may_nan
 
-        raise _NotVectorizable(str(e.op))  # NOT_EQ, NOT_IN, STARTS_WITH...
+        raise _NotVectorizable(str(op))  # NOT_EQ, NOT_IN, STARTS_WITH...
 
     return build(flt)
+
+
+def prune_cached(index: MemberStats, flt: Expression, schema: Schema) -> list[DataFileEntry]:
+    """Entries of a cached list that survive ``might_match``, delete
+    entries always kept, in list order. The vectorized mask is only a
+    conservative prefilter (it never drops an entry ``might_match`` keeps);
+    the exact ``might_match`` still runs on its survivors, so bloom, NaN and
+    mixed-encoding rules decide exactly as the per-entry loop does. A
+    filter the vector evaluator rejects takes that loop over every entry."""
+    import numpy as np
+
+    entries = index.entries
+    if flt.op is Op.ALWAYS_TRUE:
+        return list(entries)
+    try:
+        mask = _vector_match(flt, index, schema)
+    except _NotVectorizable:
+        cand = entries
+    else:
+        cand = [entries[i] for i in np.flatnonzero(mask | index.is_delete).tolist()]
+    return [e for e in cand
+            if e.content != CONTENT_DATA or might_match(flt, _stats_for_pruning(e, schema))]
 
 
 def prune_manifest_driver(path: str, flt: Expression, schema: Schema) -> list[DataFileEntry]:
@@ -242,13 +343,13 @@ def prune_manifest_driver(path: str, flt: Expression, schema: Schema) -> list[Da
         entries = [_entry_from_columns(d, i) for i in range(t.num_rows)]
         return [
             e for e in entries
-            if e.content != CONTENT_DATA or might_match(flt, _stats_by_name(e, schema))
+            if e.content != CONTENT_DATA or might_match(flt, _stats_for_pruning(e, schema))
         ]
 
     content = t.column("content").to_numpy()
     is_data = content == CONTENT_DATA
     try:
-        match = _vector_match(flt, t, schema)
+        match = _vector_match(flt, _ManifestTableStats(t), schema)
     except _NotVectorizable:
         match = _perrow_match(flt, t, schema)
     keep = np.flatnonzero(~is_data | match)
@@ -288,16 +389,19 @@ def _perrow_match(flt: Expression, t, schema: Schema):
     return out
 
 
-def _stats_by_name(e: DataFileEntry, schema: Schema) -> dict[str, ColumnStats]:
+def _stats_for_pruning(entry: DataFileEntry, schema: Schema) -> dict[str, ColumnStats]:
+    """Column-name-keyed stats view for ``might_match`` (names resolved from
+    field ids against the given schema, so renames don't break pruning)."""
     out: dict[str, ColumnStats] = {}
-    for fid, s in e.column_stats.items():
+    for fid, s in entry.column_stats.items():
         f = schema.find_field_by_id(fid)
-        if f is not None:
-            out[f.name] = ColumnStats(
-                min=s.get("min"), max=s.get("max"),
-                null_count=s.get("null_count"), value_count=s.get("value_count"),
-                nan_count=s.get("nan_count"),
-            )
+        if f is None:
+            continue
+        out[f.name] = ColumnStats(
+            min=s.get("min"), max=s.get("max"), null_count=s.get("null_count"),
+            value_count=s.get("value_count"), bloom=s.get("bloom"),
+            nan_count=s.get("nan_count"),
+        )
     return out
 
 
@@ -547,17 +651,32 @@ def merge_summary_bounds(bounds_jsons: list[str]) -> str:
     return json.dumps(agg)
 
 
-def summary_might_match(bounds_json: str, flt: Expression, schema: Schema) -> bool:
-    """Check the filter against snapshot-wide bounds; False means NO file in
-    the snapshot can match, so planning skips the manifest read entirely."""
+def decode_bounds(bounds_json: str) -> dict[int, ColumnStats] | None:
+    """field id -> bounds-only ColumnStats of a bounds summary; None when
+    the summary does not parse (it then prunes nothing)."""
     try:
         bounds = json.loads(bounds_json)
     except (TypeError, ValueError):
+        return None
+    return {int(fid_s): ColumnStats(min=b.get("min"), max=b.get("max"))
+            for fid_s, b in bounds.items()}
+
+
+def bounds_might_match(bounds: dict[int, ColumnStats] | None, flt: Expression,
+                       schema: Schema) -> bool:
+    """Check the filter against decoded aggregate bounds (``decode_bounds``);
+    None bounds always match."""
+    if bounds is None:
         return True
     stats = {}
-    for fid_s, b in bounds.items():
-        f = schema.find_field_by_id(int(fid_s))
+    for fid, cs in bounds.items():
+        f = schema.find_field_by_id(fid)
         if f is not None:
-            stats[f.name] = ColumnStats(min=b.get("min"), max=b.get("max"),
-                                        null_count=None, value_count=None)
+            stats[f.name] = cs
     return might_match(flt, stats)
+
+
+def summary_might_match(bounds_json: str, flt: Expression, schema: Schema) -> bool:
+    """Check the filter against snapshot-wide bounds; False means NO file in
+    the snapshot can match, so planning skips the manifest read entirely."""
+    return bounds_might_match(decode_bounds(bounds_json), flt, schema)

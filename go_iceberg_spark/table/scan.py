@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..errors import NoSuchSnapshotError, ValidationError
-from ..expr import ALWAYS_TRUE, ColumnStats, Expression, might_match, simplify, to_column
+from ..expr import ALWAYS_TRUE, Expression, simplify, to_column
 from ..schema import DecimalType, FixedType, PrimitiveType, Schema, to_spark_type
 from .metadata import (
     CONTENT_DATA,
@@ -60,22 +60,6 @@ class FileScanTask:
 
     file: DataFileEntry
     delete_files: list[DataFileEntry] = dc_field(default_factory=list)
-
-
-def _stats_for_pruning(entry: DataFileEntry, schema: Schema) -> dict[str, ColumnStats]:
-    """Column-name-keyed stats view for ``might_match`` (names resolved from
-    field ids against the CURRENT schema, so renames don't break pruning)."""
-    out: dict[str, ColumnStats] = {}
-    for fid, s in entry.column_stats.items():
-        f = schema.find_field_by_id(fid)
-        if f is None:
-            continue
-        out[f.name] = ColumnStats(
-            min=s.get("min"), max=s.get("max"), null_count=s.get("null_count"),
-            value_count=s.get("value_count"), bloom=s.get("bloom"),
-            nan_count=s.get("nan_count"),
-        )
-    return out
 
 
 def _bucket_partition_might_match(e: Expression, entry: DataFileEntry, md: TableMetadata) -> bool:
@@ -250,10 +234,11 @@ class ScanBuilder:
         flt = simplify(self._filter)
         enc = _encode_filter(flt, proj)
 
-        from .planning import summary_might_match
+        from .planning import bounds_might_match
 
         bounds = snap.summary.get("bounds")
-        if bounds is not None and not summary_might_match(bounds, enc, proj):
+        if bounds is not None and not bounds_might_match(
+                self._table._manifest_cache.bounds(bounds), enc, proj):
             return []
 
         entries = self._pruned_entries(snap, enc, md, proj)
@@ -277,9 +262,11 @@ class ScanBuilder:
 
         return [FileScanTask(e, dels_for(e.sequence_number)) for e in data_files]
 
-    # entry counts below this use (and fill) the table's full-entry cache;
-    # above it, scans do a pruned read per planning call instead of holding
-    # every entry in driver memory
+    # entry counts below this use (and fill) the table's full-entry cache,
+    # where every cached entry list also carries a columnar stats index
+    # (planning.MemberStats) that prunes it with numpy instead of a
+    # per-entry loop; above it, scans do a pruned read per planning call
+    # instead of holding every entry in driver memory
     _CACHE_ENTRY_LIMIT = 10_000
 
     def _pruned_entries(self, snap, enc: Expression, md: TableMetadata,
@@ -290,110 +277,68 @@ class ScanBuilder:
         proj = proj or md.current_schema
         import pyarrow.parquet as pq
 
-        from .metadata import MANIFEST_LIST_SUFFIX, read_manifest_list
+        from .metadata import MANIFEST_LIST_SUFFIX
         from .planning import (
             DISTRIBUTED_THRESHOLD,
+            bounds_might_match,
             plan_distributed,
+            prune_cached,
             prune_manifest_driver,
         )
 
         table = self._table
+        cache = table._manifest_cache
         path = os.path.join(table.location, snap.manifest_path)
-        cached = path in table._manifest_cache
-        # the pyarrow/Spark manifest tiers read local paths; object-storage
-        # metadata (table._mio set) goes through the FileIO full read below
-        if not cached and table._mio is None and not snap.manifest_path.endswith(".avro"):
-            skipped = False
-            if snap.manifest_path.endswith(MANIFEST_LIST_SUFFIX):
-                from .planning import summary_might_match
-
+        is_list = snap.manifest_path.endswith(MANIFEST_LIST_SUFFIX)
+        if path not in cache and (is_list or (
+                table._mio is None and not snap.manifest_path.endswith(".avro"))):
+            if is_list:
                 # member-level skip (Iceberg manifest-list partition
                 # summaries): a member whose aggregate bounds contradict the
                 # filter is never READ — planning I/O scales with matching
-                # members, not commits. Members holding delete entries
-                # (nd > 0) or without stamped bounds are always read.
-                all_members = read_manifest_list(path)
-                members = [
-                    m for m in all_members
-                    if m.get("nd", 1) or "bounds" not in m
-                    or summary_might_match(m["bounds"], enc, proj)
-                ]
-                skipped = len(members) < len(all_members)
-                n = sum(m["n"] for m in members)
-                mpaths = [os.path.join(table.location, m["path"]) for m in members]
+                # members, not commits; on object storage each member read
+                # is a network round-trip. Members holding delete entries
+                # or without stamped bounds are always read. The parsed list
+                # caches by path (lists are immutable).
+                members = cache.manifest_list(path, table._mio)
+                keep = [m for m, b in members if bounds_might_match(b, enc, proj)]
+                skipped = len(keep) < len(members)
+                mpaths = [os.path.join(table.location, m["path"]) for m in keep]
             else:
-                n = pq.read_metadata(path).num_rows  # footer-only, ~1 ms
+                skipped = False
                 mpaths = [path]
-            if n > DISTRIBUTED_THRESHOLD:
-                from .write import resolve_bucket_fn
+            # the pyarrow/Spark manifest tiers read local paths; object-
+            # storage members (table._mio set) are read whole into the cache
+            if table._mio is None:
+                n = (sum(m["n"] for m in keep) if is_list
+                     else pq.read_metadata(path).num_rows)  # footer-only, ~1 ms
+                if n > DISTRIBUTED_THRESHOLD:
+                    from .write import resolve_bucket_fn
 
-                return plan_distributed(
-                    table.spark, mpaths, enc, proj,
-                    specs=md.partition_specs,
-                    bucket_fn=resolve_bucket_fn(md.properties))
-            if n > self._CACHE_ENTRY_LIMIT:
-                out: list[DataFileEntry] = []
-                for p in mpaths:
-                    out.extend(prune_manifest_driver(p, enc, proj))
-                return out
+                    return plan_distributed(
+                        table.spark, mpaths, enc, proj,
+                        specs=md.partition_specs,
+                        bucket_fn=resolve_bucket_fn(md.properties))
+                if n > self._CACHE_ENTRY_LIMIT:
+                    out: list[DataFileEntry] = []
+                    for p in mpaths:
+                        out.extend(prune_manifest_driver(p, enc, proj))
+                    return out
             if skipped:
-                # r13: honor the member-level skip on the SMALL path too —
-                # this used to fall through to manifest_entries(snap), which
-                # reads EVERY member and drove a whole-snapshot python prune
-                # (profiled: a 550k-entry snapshot whose huge member was
-                # bounds-skipped still paid a 550k-entry driver loop per
-                # planning call). Entries of a skipped member provably fail
-                # the per-entry might_match (each entry's interval is inside
-                # the member's aggregate bounds), so reading only the kept
-                # members is result-identical — the same logic the FileIO
-                # branch below already applies. Members cache individually
-                # (immutable), same as everywhere else.
-                from .metadata import read_manifest
-
-                entries: list[DataFileEntry] = []
+                # read (and cache) only the kept members: entries of a
+                # skipped member provably fail the per-entry might_match
+                # (each entry's interval lies inside the member's aggregate
+                # bounds), so this is result-identical to pruning the whole
+                # snapshot. The whole-snapshot cache under the LIST path
+                # stays untouched (it belongs to manifest_entries).
+                out = []
                 for mpath in mpaths:
-                    if mpath not in table._manifest_cache:
-                        table._manifest_cache[mpath] = read_manifest(mpath)
-                    entries.extend(table._manifest_cache[mpath])
-                return [
-                    e for e in entries
-                    if e.content != CONTENT_DATA
-                    or might_match(enc, _stats_for_pruning(e, proj))
-                ]
-        elif (not cached and table._mio is not None
-              and snap.manifest_path.endswith(MANIFEST_LIST_SUFFIX)):
-            # object-store tables (FileIO): the same member-level bounds
-            # skip, reading ONLY the matching members — on S3 each member
-            # read is a network round-trip, so this is where skipping
-            # members matters most. Members already cached are free either
-            # way; the full-set cache under the LIST path stays untouched
-            # (it belongs to manifest_entries' whole-snapshot reads).
-            from .metadata import read_manifest
-            from .planning import summary_might_match
-
-            members = read_manifest_list(path, table._mio)
-            keep = [
-                m for m in members
-                if m.get("nd", 1) or "bounds" not in m
-                or summary_might_match(m["bounds"], enc, proj)
-            ]
-            if len(keep) < len(members):
-                entries = []
-                for m in keep:
-                    mpath = os.path.join(table.location, m["path"])
-                    if mpath not in table._manifest_cache:
-                        table._manifest_cache[mpath] = read_manifest(mpath, table._mio)
-                    entries.extend(table._manifest_cache[mpath])
-                return [
-                    e for e in entries
-                    if e.content != CONTENT_DATA
-                    or might_match(enc, _stats_for_pruning(e, proj))
-                ]
-        entries = table.manifest_entries(snap)
-        return [
-            e for e in entries
-            if e.content != CONTENT_DATA or might_match(enc, _stats_for_pruning(e, proj))
-        ]
+                    if mpath not in cache:
+                        cache[mpath] = read_manifest(mpath, table._mio)
+                    out.extend(prune_cached(cache.stats_index(mpath), enc, proj))
+                return out
+        table.manifest_entries(snap)  # caches the snapshot's entries under path
+        return prune_cached(cache.stats_index(path), enc, proj)
 
     # -- execution --------------------------------------------------------
     def to_df(self) -> DataFrame:

@@ -64,6 +64,58 @@ import os
 COMMIT_SEQ_PLACEHOLDER = "__commit-seq__"
 
 
+class ManifestCache(dict):
+    """Entries of immutable manifests by path (members, and whole-snapshot
+    sets under a snapshot's manifest path), plus views derived from the
+    same immutable files that live and die with it: parsed manifest lists
+    with their members' bounds decoded, decoded snapshot bounds, and one
+    lazily built columnar stats index per cached entry list
+    (``planning.MemberStats``). ``clear()`` drops all of them, so
+    ``refresh()`` and maintenance invalidate every view at once."""
+
+    def __init__(self):
+        super().__init__()
+        self._lists: dict[str, list[tuple[dict, dict | None]]] = {}
+        self._bounds: dict[str, dict | None] = {}
+        self._indexes: dict[str, Any] = {}
+
+    def clear(self) -> None:
+        super().clear()
+        self._lists.clear()
+        self._bounds.clear()
+        self._indexes.clear()
+
+    def manifest_list(self, path: str, io=None) -> list[tuple[dict, dict | None]]:
+        """(member record, decoded bounds) per member of the manifest list
+        at ``path``. Bounds are None for members that must always be read:
+        those holding delete entries, those without stamped bounds."""
+        if path not in self._lists:
+            self._lists[path] = [
+                (m, None if m.get("nd", 1) or "bounds" not in m
+                 else self.bounds(m["bounds"]))
+                for m in read_manifest_list(path, io)]
+        return self._lists[path]
+
+    def bounds(self, bounds_json: str) -> dict | None:
+        """``planning.decode_bounds``, memoized on the JSON text."""
+        from .planning import decode_bounds
+
+        if bounds_json not in self._bounds:
+            self._bounds[bounds_json] = decode_bounds(bounds_json)
+        return self._bounds[bounds_json]
+
+    def stats_index(self, path: str):
+        """Columnar stats index over the entries cached under ``path``,
+        rebuilt if that entry list was replaced since it was built."""
+        from .planning import MemberStats
+
+        entries = self[path]
+        idx = self._indexes.get(path)
+        if idx is None or idx.entries is not entries:
+            idx = self._indexes[path] = MemberStats(entries)
+        return idx
+
+
 class Table:
     """A loaded table: identifier + metadata + spark session
     (reference: table/table.go:17-23)."""
@@ -80,7 +132,7 @@ class Table:
         self.version = version
         self.max_retries = max_retries
         self.retry_backoff_ms = retry_backoff_ms
-        self._manifest_cache: dict[str, list[DataFileEntry]] = {}
+        self._manifest_cache = ManifestCache()
         # storage routing: all METADATA I/O (metadata JSON, manifests both
         # dialects) goes through a FileIO picked from the location scheme, so
         # a table whose location is s3:// commits via conditional PUT.
@@ -157,8 +209,9 @@ class Table:
         immutable, so they cache individually and survive across commits
         that reuse them. A legacy single-manifest snapshot is one member."""
         if snap.manifest_path.endswith(MANIFEST_LIST_SUFFIX):
-            members = read_manifest_list(os.path.join(self.location, snap.manifest_path), self._mio)
-            rels = [m["path"] for m in members]
+            members = self._manifest_cache.manifest_list(
+                os.path.join(self.location, snap.manifest_path), self._mio)
+            rels = [m["path"] for m, _ in members]
         else:
             rels = [snap.manifest_path]
         out = []

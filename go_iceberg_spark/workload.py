@@ -43,9 +43,13 @@ def invalidate_load_cache(spark: SparkSession | None = None) -> None:
     """Drop memoized ``load()`` plans (r13, ADVICE): call after rewriting a
     parquet path in place (refreshed sf directories) so the next ``load``
     re-lists files and re-inspects footers. With ``spark`` given, clears
-    only that session's memo; otherwise clears the footer cache too."""
+    that session's memos — its load plans, its broadcast verdicts
+    (``similarity._bcast_verdicts``) and its registered-views marker, so
+    ``register_views`` re-registers; otherwise clears the footer cache."""
     if spark is not None:
         getattr(spark, "_graft_load_cache", {}).clear()
+        getattr(spark, "_graft_bcast_verdicts", {}).clear()
+        spark._graft_views_sf_dir = None
         return
     _NS_COLS_CACHE.clear()
 
@@ -96,18 +100,16 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-_VIEWS_REGISTERED: dict[int, str] = {}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register all testdata tables as temp views (for spark.sql queries);
     skipped when this session's views already point at this sf_dir (views
-    are session-global, so only the LAST registered sf_dir is live)."""
-    if _VIEWS_REGISTERED.get(id(spark)) == sf_dir:
+    are session-global, so only the LAST registered sf_dir is live). The
+    marker lives on the session object, like ``load``'s memo."""
+    if getattr(spark, "_graft_views_sf_dir", None) == sf_dir:
         return
     for t in TABLES:
         load(spark, sf_dir, t).createOrReplaceTempView(t)
-    _VIEWS_REGISTERED[id(spark)] = sf_dir
+    spark._graft_views_sf_dir = sf_dir
 
 
 @dataclass

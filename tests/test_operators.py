@@ -1345,10 +1345,10 @@ def test_broadcast_verdict_cache(spark, monkeypatch):
     est = int(q._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     assert est > S.MAX_BROADCAST_QUERY_BYTES, "fixture must take the probe path"
 
-    S._BCAST_VERDICTS.clear()
+    S._bcast_verdicts(spark).clear()
     hinted = S._broadcast_if_small(q)
     assert hinted is not q  # verified small -> hinted
-    assert len(S._BCAST_VERDICTS) == 1 and all(S._BCAST_VERDICTS.values())
+    assert len(S._bcast_verdicts(spark)) == 1 and all(S._bcast_verdicts(spark).values())
 
     def boom(self):  # pragma: no cover - must not be called
         raise AssertionError("probe job ran despite cached verdict")
@@ -1356,6 +1356,46 @@ def test_broadcast_verdict_cache(spark, monkeypatch):
     monkeypatch.setattr(DataFrame, "count", boom)
     hinted2 = S._broadcast_if_small(q)
     assert hinted2 is not q
+
+
+def test_session_caches_reprobe_after_invalidate(spark, tmp_path, monkeypatch):
+    """The broadcast-verdict memo and the registered-views marker live on
+    the session and are cleared by ``invalidate_load_cache(spark)``: after
+    a table is rewritten in place and the session invalidated, the views
+    are re-registered over the new files and the verdict is probed again."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from go_iceberg_spark import workload as W
+    from go_iceberg_spark.operators import similarity as S
+
+    sf = str(tmp_path / "sf")
+    (tmp_path / "sf").mkdir()
+    for name in W.TABLES:
+        pq.write_table(pa.table({"k": [1]}), f"{sf}/{name}.parquet")
+    loads = []
+    real_load = W.load
+    monkeypatch.setattr(W, "load", lambda *a: loads.append(a[2]) or real_load(*a))
+    W.register_views(spark, sf)
+    W.register_views(spark, sf)
+    assert len(loads) == len(W.TABLES)  # second call: marker hit, no loads
+    q = spark.range(0, 20_000_000).filter(F.col("id") < 3)
+    S._broadcast_if_small(q)
+    assert S._bcast_verdicts(spark)
+
+    pq.write_table(pa.table({"k": [1, 2, 3]}), f"{sf}/region.parquet")
+    W.invalidate_load_cache(spark)
+    assert not S._bcast_verdicts(spark)
+    W.register_views(spark, sf)
+    assert len(loads) == 2 * len(W.TABLES)
+    assert spark.table("region").count() == 3
+    probes = []
+    cls = type(q)  # the concrete (classic) DataFrame class overrides count
+    real_count = cls.count
+    monkeypatch.setattr(cls, "count", lambda self: probes.append(1) or real_count(self))
+    assert S._broadcast_if_small(q) is not q
+    assert probes == [1] and len(S._bcast_verdicts(spark)) == 1
+    W.invalidate_load_cache(spark)  # leave no views over tmp_path behind
 
 
 def test_minhash_nondeterministic_input_pinned(spark):

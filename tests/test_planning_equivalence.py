@@ -1,10 +1,12 @@
 """Cross-tier pruning equivalence fuzz (VERDICT r2 task #9).
 
-The scan picks among three planning tiers by metadata size (scan.py
+The scan picks among its planning tiers by metadata size (scan.py
 ``_pruned_entries``); all must agree on which files survive:
 
 - ``prune_manifest_driver`` (pyarrow + numpy / per-row ``might_match``)
-- ``plan_distributed``'s Catalyst stats predicate (planning.py:367)
+- ``plan_distributed``'s Catalyst stats predicate
+- ``prune_cached`` over a cached entry list's ``MemberStats`` index (numpy
+  prefilter, exact ``might_match`` on its survivors)
 - the in-memory ``might_match`` reference itself
 
 Invariants checked on thousands of randomized (file-stats, filter) pairs,
@@ -18,6 +20,8 @@ derives them:
    still prune).
 3. On numeric-only filter shapes the two tiers are IDENTICAL.
 4. The driver tier is exactly ``might_match`` applied per file.
+5. The cached-member tier is exactly ``might_match`` applied per file, in
+   manifest order.
 """
 
 from __future__ import annotations
@@ -33,7 +37,12 @@ from pyspark.sql import Row
 from go_iceberg_spark.expr import Op, col, might_match, ColumnStats
 from go_iceberg_spark.schema import from_spark_schema
 from go_iceberg_spark.table.metadata import CONTENT_DATA, DataFileEntry, write_manifest
-from go_iceberg_spark.table.planning import plan_distributed, prune_manifest_driver
+from go_iceberg_spark.table.planning import (
+    MemberStats,
+    plan_distributed,
+    prune_cached,
+    prune_manifest_driver,
+)
 
 SEED = 20260814
 N_FILES = 250
@@ -178,11 +187,12 @@ def fuzz_manifest(spark, tmp_path_factory):
     ]
     path = str(tmp_path_factory.mktemp("fuzz") / "manifest.parquet")
     write_manifest(path, entries)
-    return files, schema, path, rng
+    return files, schema, path, rng, entries
 
 
 def test_planning_tiers_agree(spark, fuzz_manifest):
-    files, schema, path, rng = fuzz_manifest
+    files, schema, path, rng, entries = fuzz_manifest
+    index = MemberStats(entries)  # built once, reused by every filter
     by_path = {f["path"]: f for f in files}
 
     def stats_by_name(f):
@@ -195,12 +205,15 @@ def test_planning_tiers_agree(spark, fuzz_manifest):
     for flt in _gen_filters(rng):
         drv = {e.file_path for e in prune_manifest_driver(path, flt, schema)}
         dist = {e.file_path for e in plan_distributed(spark, path, flt, schema)}
+        cached = [e.file_path for e in prune_cached(index, flt, schema)]
         ref = {f["path"] for f in files if might_match(flt, stats_by_name(f))}
         truth = {f["path"] for f in files if _row_truth(flt, f)}
 
         assert truth <= drv, (flt, "driver tier dropped a matching file")
         assert truth <= dist, (flt, "distributed tier dropped a matching file")
         assert drv == ref, (flt, "driver tier != might_match reference")
+        assert cached == [e.file_path for e in entries if e.file_path in ref], (
+            flt, "cached-member tier != might_match reference")
         assert drv <= dist, (flt, "distributed pruned harder than driver")
         if _numeric_only(flt, schema):
             assert drv == dist, (flt, "numeric filter: tiers disagree",
